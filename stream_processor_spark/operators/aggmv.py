@@ -171,7 +171,9 @@ def append_agg_mv(spark: SparkSession, name: str, batch: DataFrame) -> bool:
     """O(batch + |groups|) maintenance: aggregate the BATCH alone and
     append its state rows. Returns False (no write) when the batch's
     content fingerprint is already present — exact under at-least-once
-    redelivery."""
+    redelivery (a `storage.stream_updates` retry). The healing is at
+    WRITE time because states fold additively: a duplicate row can't
+    be deduped at read."""
     fp = _batch_fingerprint(batch)
     # foreachBatch hands over a CLONED session whose inserts don't
     # invalidate the parent session's cached file index for the table —
@@ -193,32 +195,6 @@ def serve_agg_mv(spark: SparkSession, name: str) -> DataFrame:
     |batches|), never a fact-table scan."""
     spark.catalog.refreshTable(name)
     return finalize(merge_states(spark.table(name)))
-
-
-def stream_agg_mv_updates(
-    spark: SparkSession,
-    fact_stream: DataFrame,
-    name: str,
-    checkpoint_dir: str,
-):
-    """Maintain the MV from a fact STREAM: each micro-batch runs
-    :func:`append_agg_mv` through foreachBatch — O(batch + |groups|)
-    per trigger. A foreachBatch retry redelivers identical rows, hits
-    the same content fingerprint, and is skipped, so the fold stays
-    exact under at-least-once delivery (same contract as
-    `postings.stream_postings_updates`, with the healing at WRITE time
-    here because states fold additively — a duplicate row can't be
-    deduped at read)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_agg_mv(spark, name, batch_df)
-
-    return (
-        fact_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def compact_agg_mv(spark: SparkSession, name: str) -> None:

@@ -136,7 +136,15 @@ def append_ivf_index(
     (queries keep probing the same lists), so append-then-query equals
     rebuild-then-query EXACTLY as long as the model is unchanged
     (tested); centroid drift is handled by a periodic full
-    `ensure_ivf_index` rebuild, not per append."""
+    `ensure_ivf_index` rebuild, not per append.
+
+    Delivery contract under `storage.stream_updates`: at-least-once —
+    a foreachBatch retry re-inserts the SAME rows (assignment is
+    deterministic under the frozen model). Serving heals replays
+    exactly with ``ivf_query_indexed(..., dedup_replays=True)``
+    (duplicate vec_ids dropped AFTER partition pruning — cost scales
+    with probed lists, not the corpus); `compact_ivf_lists` removes
+    the duplicates and the per-append file growth permanently."""
     labels, C, scc = npk.model_from_rows(spark.table(cent_name).collect())
 
     def assign(batches):
@@ -175,44 +183,6 @@ def append_ivf_index(
     # refresh a session that read the table before the stream serves the
     # pre-append snapshot forever (round-13, found via the graph path)
     spark.catalog.refreshTable(lists_name)
-
-
-def stream_ivf_updates(
-    spark: SparkSession,
-    vec_stream: DataFrame,
-    lists_name: str,
-    cent_name: str,
-    checkpoint_dir: str,
-    compact_every: int | None = None,
-):
-    """Maintain the IVF index from a vector STREAM — the ANN twin of
-    `postings.stream_postings_updates`: each micro-batch runs
-    :func:`append_ivf_index` (assign only the new vectors against the
-    FROZEN model, one file per touched list) through foreachBatch.
-    Per-batch cost is O(batch); the quantizer never moves, so serves
-    keep probing the same lists mid-stream.
-
-    Delivery contract (the postings discipline): the file append is
-    at-least-once — a foreachBatch retry re-inserts the SAME rows
-    (assignment is deterministic under the frozen model). Serving heals
-    replays exactly with ``ivf_query_indexed(..., dedup_replays=True)``
-    (duplicate vec_ids dropped AFTER partition pruning — cost scales
-    with probed lists, not the corpus); ``compact_every`` batches, the
-    LSM repair (`compact_ivf_lists`) removes the duplicates and the
-    per-append file growth permanently. Centroid drift remains a
-    periodic full `ensure_ivf_index` rebuild, not a streaming concern."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_ivf_index(spark, lists_name, cent_name, batch_df)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_ivf_lists(spark, lists_name)
-
-    return (
-        vec_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def ivf_multi_query_indexed(
@@ -319,8 +289,9 @@ def ivf_query_indexed(
     every similarity operator, so results match `sim_ann_ivf`
     bit-for-bit. ``dedup_replays`` drops duplicate vec_ids AFTER the
     partition pruning (needed when at-least-once streaming appends —
-    `stream_ivf_updates` — may have replayed a batch; cost scales with
-    the probed lists, and compaction makes it unnecessary again)."""
+    `append_ivf_index` under `storage.stream_updates` — may have
+    replayed a batch; cost scales with the probed lists, and
+    compaction makes it unnecessary again)."""
     import pandas as pd
 
     labels, C, scc = npk.model_from_rows(spark.table(cent_name).collect())
@@ -1241,7 +1212,13 @@ def append_sign_index(
     """Incremental maintenance: pack ONLY the new vectors' signatures
     and insert them — O(batch), never a corpus re-scan. append(B) onto
     an index built from A ≡ build from A∪B EXACTLY (per-row pure
-    function, no corpus model), the `append_minhash_index` contract."""
+    function, no corpus model), the `append_minhash_index` contract.
+
+    Delivery contract under `storage.stream_updates`: at-least-once — a
+    foreachBatch retry re-inserts byte-identical rows. Serving heals
+    replays exactly with ``hamming_query_indexed(...,
+    dedup_replays=True)``; :func:`compact_flat_index` removes the
+    duplicates and restores the size-based file profile permanently."""
     from stream_processor_spark.operators import similarity as sim
 
     lo, hi = sim.sign_signature(F.col("embedding"))
@@ -1253,39 +1230,6 @@ def append_sign_index(
         .insertInto(sig_name)
     )
     spark.catalog.refreshTable(sig_name)
-
-
-def stream_sign_updates(
-    spark: SparkSession,
-    vec_stream: DataFrame,
-    sig_name: str,
-    checkpoint_dir: str,
-    compact_every: int | None = None,
-):
-    """Maintain the binary sign-signature layout from a vector STREAM
-    (round 12: `stream_ivf_updates` extended to the flat sign table):
-    each micro-batch packs ONLY the new vectors' signatures through
-    :func:`append_sign_index` via foreachBatch — O(batch), there is no
-    corpus model to consult at all.
-
-    Delivery contract: at-least-once appends; a foreachBatch retry
-    re-inserts byte-identical rows (the packing is a pure per-vector
-    function). Serving heals replays exactly with
-    ``hamming_query_indexed(..., dedup_replays=True)``; every
-    ``compact_every`` batches :func:`compact_flat_index` removes the
-    duplicates and restores the size-based file profile permanently."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_sign_index(spark, sig_name, batch_df)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_flat_index(spark, sig_name)
-
-    return (
-        vec_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def _point_read_row(
@@ -1342,7 +1286,7 @@ def hamming_query_indexed(
     is one slim-table scan regardless of embedding width.
 
     ``dedup_replays=True`` drops duplicate vec_ids first (replayed
-    `stream_sign_updates` appends insert byte-identical rows, so the
+    `append_sign_index` calls insert byte-identical rows, so the
     key dedup is exact); leave False for batch-built or freshly
     compacted layouts — the duplicate-free common case keeps the serve
     a pure scan + TakeOrdered."""

@@ -338,7 +338,10 @@ def append_minhash_index(
     precisely so bucket growth under appends can't stale it. Replayed
     batches (foreachBatch retry) insert byte-identical rows; the serve
     path heals them (``dedup_replays`` in
-    :func:`minhash_pairs_from_index`). O(batch): the append never
+    :func:`minhash_pairs_from_index`, on by default, and the hot-bucket
+    guard counts DISTINCT doc_ids so a replay can't inflate it);
+    :func:`compact_minhash_index` removes the duplicates and the
+    per-append file growth permanently. O(batch): the append never
     reads either index table."""
     hs, bands_h = lsh_band_frame(new_docs, "doc_id", "text", min_tokens)
     bands_h.select("doc_id", "band_idx", "band_key").write.mode(
@@ -351,47 +354,6 @@ def append_minhash_index(
     # pre-append snapshot forever (round-13, found via the graph path)
     spark.catalog.refreshTable(bands_name)
     spark.catalog.refreshTable(hset_name)
-
-
-def stream_minhash_updates(
-    spark,
-    doc_stream: DataFrame,
-    bands_name: str,
-    hset_name: str,
-    checkpoint_dir: str,
-    compact_every: int | None = None,
-    min_tokens: int = 3,
-):
-    """Maintain the MinHash-LSH layout from a document STREAM (round
-    12: the `annindex.stream_ivf_updates` discipline extended to the
-    near-dup layout): each micro-batch shingles/hashes ONLY the new
-    docs through :func:`append_minhash_index` via foreachBatch —
-    O(batch), never a corpus re-scan, and band-bucket co-location is
-    preserved because `insertInto` routes rows through the bucket hash.
-
-    Delivery contract: the file append is at-least-once — a
-    foreachBatch retry re-inserts byte-identical rows (every persisted
-    row is a pure per-document function of pinned hashes). Serving
-    heals replays exactly (``dedup_replays`` in
-    :func:`minhash_pairs_from_index`, on by default, and the hot-bucket
-    guard counts DISTINCT doc_ids so a replay can't inflate it — both
-    already pinned by tests); every ``compact_every`` batches the LSM
-    repair (:func:`compact_minhash_index`) removes the duplicates and
-    the per-append file growth permanently."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_minhash_index(
-            spark, bands_name, hset_name, batch_df, min_tokens
-        )
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            compact_minhash_index(spark, bands_name, hset_name)
-
-    return (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def compact_minhash_index(

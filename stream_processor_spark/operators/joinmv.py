@@ -230,7 +230,13 @@ def append_left(
     spark: SparkSession, names: tuple[str, str, str, str], batch: DataFrame
 ) -> bool:
     """Apply an orders batch: view += Δ ⋈ right_acc(committed),
-    accumulate Δ, commit. Returns False on a replayed batch."""
+    accumulate Δ, commit. Returns False on a replayed batch.
+
+    Delivery contract under `storage.stream_updates`: at-least-once. A
+    foreachBatch retry hits the same content fingerprint in the log and
+    is skipped before any write; a retry after a partial apply rewrites
+    the SAME partitions (dynamic-partition overwrite), so the fold
+    stays exact."""
     return _append_side(spark, names, batch, "L")[0]
 
 
@@ -284,6 +290,11 @@ def append_with_txn_sink(
     - the txn append runs even when joinmv says 'replayed': that is
       exactly the crash-between-layers window, and ``append(df,
       txn_id)`` is a no-op when the transaction already committed.
+
+    Under `storage.stream_updates` this is the runner's
+    ``Sink("txn_table")`` exactly-once discipline applied to the IVM
+    output stream: build ``table`` from ``batch.sparkSession`` inside
+    the append, and each micro-batch is one manifest commit.
     """
     applied, fp = _append_side(spark, names, batch, side)
     bspark = batch.sparkSession
@@ -298,55 +309,3 @@ def append_with_txn_sink(
     )
     table.append(delta, txn_id=fp)
     return applied
-
-
-def stream_join_mv_updates_txn(
-    spark: SparkSession,
-    left_stream: DataFrame,
-    names: tuple[str, str, str, str],
-    table_root: str,
-    checkpoint_dir: str,
-):
-    """`stream_join_mv_updates` with the per-batch deltas additionally
-    committed to a TxnTable at ``table_root`` — the runner's
-    ``Sink("txn_table")`` exactly-once discipline applied to the IVM
-    output stream (each micro-batch is one manifest commit; foreachBatch
-    retries replay-skip on the fingerprint txn_id)."""
-    from stream_processor_spark.operators.txn_table import TxnTable
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        table = TxnTable(batch_df.sparkSession, table_root)
-        append_with_txn_sink(spark, names, table, batch_df, "L")
-
-    return (
-        left_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_join_mv_updates(
-    spark: SparkSession,
-    left_stream: DataFrame,
-    names: tuple[str, str, str, str],
-    checkpoint_dir: str,
-):
-    """Maintain the join view from a STREAM of left-side inserts: each
-    micro-batch runs :func:`append_left` through foreachBatch —
-    O(|Δ| + matched buckets) per trigger. A foreachBatch retry
-    redelivers identical rows, hits the same content fingerprint in
-    the log, and is skipped before any write; a retry after a partial
-    apply rewrites the SAME partitions (dynamic-partition overwrite),
-    so the fold stays exact under at-least-once delivery — the
-    `stream_agg_mv_updates` contract carried to join views."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_left(spark, names, batch_df)
-
-    return (
-        left_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -286,8 +286,11 @@ def append_postings(
     row per append. A redelivered batch (foreachBatch retry) has the
     same fingerprint and is skipped, so stats stay exact under
     at-least-once replay; its duplicate POSTINGS rows are healed at
-    serve time by ``dedup_replays=True``. Returns True when the stats
-    row was appended, False for a detected replay.
+    serve time by ``bm25_from_postings(..., dedup_replays=True)``
+    (the alternative — manifest-committed appends via
+    operators/txn_table — would trade the bucketed layout's pruning for
+    commit atomicity). Returns True when the stats row was appended,
+    False for a detected replay.
 
     Write-order note: the batch's df-dictionary rows land BEFORE its
     stats row. A crash between the two leaves a transient window where
@@ -426,40 +429,6 @@ def bm25_multi_query(
     )
 
 
-def stream_postings_updates(
-    spark: SparkSession,
-    doc_stream: DataFrame,
-    post_name: str,
-    stats_name: str,
-    checkpoint_dir: str,
-):
-    """Maintain the postings index from a document STREAM: each
-    micro-batch runs :func:`append_postings` (tokenize only the new
-    docs, bucket-routed insert, one appended stats row) through
-    foreachBatch. Per-batch cost is O(batch) — the stats fold never
-    rescans the table (round-6 verdict item 1).
-
-    Delivery contract: the file append itself is at-least-once — a
-    foreachBatch retry re-inserts the SAME postings rows (tokenization
-    is deterministic per document). Serving heals that exactly:
-    ``bm25_from_postings(..., dedup_replays=True)`` drops duplicate
-    (tok, doc_id) rows AFTER bucket pruning, so replayed appends cannot
-    change any score and the dedup cost scales with matched postings,
-    not the corpus. (The alternative — manifest-committed appends via
-    operators/txn_table — trades the bucketed layout's pruning for
-    commit atomicity; this keeps the layout and heals at read.)"""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        append_postings(spark, post_name, stats_name, batch_df)
-
-    return (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def bm25_from_postings(
     spark: SparkSession,
     post_name: str,
@@ -479,7 +448,7 @@ def bm25_from_postings(
 
     ``dedup_replays=True`` additionally drops duplicate (tok, doc_id)
     rows after pruning — required when the index receives streaming
-    appends (:func:`stream_postings_updates`), whose foreachBatch
+    appends (`storage.stream_updates`), whose foreachBatch
     retries re-insert identical rows; a replayed batch then cannot
     affect any score. Leave False for batch-built indexes (no
     duplicates to heal; saves the dedup aggregate)."""

@@ -164,7 +164,14 @@ def append_semantic_index(
     ingest pattern every other layout's append assumes) this equals
     the from-scratch cap applied to the grown corpus under the same
     frozen model, which is the append≡rebuild parity
-    `tests/test_index_maintenance.py` pins."""
+    `tests/test_index_maintenance.py` pins.
+
+    Delivery contract under `storage.stream_updates`: at-least-once. A
+    foreachBatch retry re-runs the append with the first attempt's
+    rows already counted by the capacity read, so cap decisions never
+    loosen; rows re-inserted below cap are byte-identical duplicates
+    that the serve's ``.distinct()`` (`candidate_pairs_from_index`)
+    heals exactly."""
     from stream_processor_spark.operators import kmeans
     from stream_processor_spark.operators import similarity as sim
 
@@ -212,53 +219,6 @@ def append_semantic_index(
         spark.catalog.refreshTable(band_name)
     finally:
         bands.unpersist()
-
-
-def stream_semantic_updates(
-    spark: SparkSession,
-    vec_stream,
-    asn_name: str,
-    band_name: str,
-    cent_name: str,
-    checkpoint_dir: str,
-    n_bands: int = 4,
-    bits: int = 4,
-    max_bucket: int = 256,
-):
-    """Maintain the semantic-dedup layout from a vector STREAM (round
-    12, completing the streaming-maintenance set: postings, IVF,
-    minhash, sign, semantic): each micro-batch runs
-    :func:`append_semantic_index` through foreachBatch — assign against
-    the FROZEN Lloyd model, band-cap capacity read per touched bucket —
-    so per-batch cost is O(batch) and batch boundaries don't change the
-    layout (streamed ≡ the same rows appended directly; pinned in
-    tests/test_index_maintenance.py).
-
-    Delivery contract: at-least-once. A foreachBatch retry re-runs the
-    append with the first attempt's rows already counted by the
-    capacity read, so cap decisions never loosen; rows re-inserted
-    below cap are byte-identical duplicates that the serve's
-    ``.distinct()`` (`candidate_pairs_from_index`) heals exactly. Model
-    drift remains a periodic `ensure_semantic_index` rebuild."""
-
-    def process(batch_df, batch_id: int) -> None:
-        append_semantic_index(
-            spark,
-            asn_name,
-            band_name,
-            cent_name,
-            batch_df,
-            n_bands=n_bands,
-            bits=bits,
-            max_bucket=max_bucket,
-        )
-
-    return (
-        vec_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def candidate_pairs_from_index(

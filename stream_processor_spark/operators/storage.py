@@ -19,6 +19,8 @@ with AQE bucket coalescing).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -306,6 +308,28 @@ def compact_bucketed_table(
     )
     swap_tables(spark, name, tmp)
     return num_buckets
+
+
+def stream_updates(
+    stream: DataFrame, append: Callable[[DataFrame], object], checkpoint_dir: str
+):
+    """Maintain a persisted layout from a STREAM: every micro-batch is
+    handed to ``append(batch_df)`` through foreachBatch, drained with
+    ``availableNow`` and checkpointed at ``checkpoint_dir``; returns the
+    started query. ``append`` is the layout's own ``append_*`` closed
+    over its table names, e.g.
+    ``lambda b: append_postings(spark, post, stats, b)``.
+
+    Delivery contract: at-least-once. A foreachBatch retry calls
+    ``append`` again with the same rows; each ``append_*`` docstring
+    says how that layout heals the replay (serve-time dedup, write-time
+    fingerprint skip, or compaction)."""
+    return (
+        stream.writeStream.foreachBatch(lambda b, _id: append(b))
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 # ---------------------------------------------------------------- z-order ----

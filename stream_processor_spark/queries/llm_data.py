@@ -2108,15 +2108,14 @@ _PQR_PERSISTED: list = []
 
 
 def _pqr_drop_previous() -> None:
-    """Unpersist the previous invocation's caches. A stale handle whose
-    SparkSession has since stopped must not break the new build
-    (multi-session tests/tools) — drop it silently."""
+    """Unpersist the previous invocation's caches. A handle whose
+    SparkSession has since stopped (multi-session tests/tools) holds no
+    cache and is skipped — its unpersist would raise; an unpersist
+    failure on a live session propagates."""
     while _PQR_PERSISTED:
         h = _PQR_PERSISTED.pop()
-        try:
+        if h.sparkSession.sparkContext._jsc is not None:
             h.unpersist()
-        except Exception:
-            pass
 
 
 def _pq_residual_frame(t, shortlist=_PQR_SHORTLIST):

@@ -39,6 +39,17 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from stream_processor_spark.operators import (
+    annindex,
+    dedup,
+    graphann,
+    postings,
+    semindex,
+    storage,
+    zonemap,
+)
+from stream_processor_spark.queries import REGISTRY, reference
+
 
 @dataclass(frozen=True)
 class Route:
@@ -60,182 +71,56 @@ class Route:
         return self.layout if isinstance(self.layout, tuple) else (self.layout,)
 
 
-def _postings_tables(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
-    from stream_processor_spark.operators.postings import postings_names
-
-    return postings_names(spark, sf_dir)
-
-
-def _ivf_tables(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
-    from stream_processor_spark.operators.annindex import ivf_names
-
-    return ivf_names(sf_dir)
-
-
-def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
-    from stream_processor_spark.operators.storage import bucketed_pair_names
-
-    return bucketed_pair_names(spark, sf_dir)
-
-
-def _ivf_trained_tables(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
-    from stream_processor_spark.operators.annindex import ivf_trained_names
-
-    return ivf_trained_names(sf_dir)
-
-
-def _pq_tables(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
-    from stream_processor_spark.operators.annindex import pq_names
-
-    return pq_names(sf_dir)
-
-
-def _build_postings(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.operators.postings import ensure_postings
-
-    ensure_postings(spark, sf_dir)
-
-
-def _build_ivf(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.operators.annindex import ensure_ivf_index
-
-    ensure_ivf_index(spark, sf_dir)
-
-
-def _build_bucketed(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.operators.storage import bucketed_pair
-
-    bucketed_pair(spark, sf_dir)
-
-
-def _build_ivf_trained(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.operators.annindex import (
-        ensure_ivf_trained_index,
-    )
-
-    ensure_ivf_trained_index(spark, sf_dir)
-
-
-def _build_pq(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.operators.annindex import ensure_pq_index
-
-    ensure_pq_index(spark, sf_dir)
-
-
-def _minhash_tables(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
-    from stream_processor_spark.operators.dedup import minhash_names
-
-    return minhash_names(sf_dir)
-
-
-def _build_minhash(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.operators.dedup import ensure_minhash_index
-
-    ensure_minhash_index(spark, sf_dir)
-
-
-def _semantic_tables(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
-    from stream_processor_spark.operators.semindex import semantic_names
-
-    return semantic_names(sf_dir)
-
-
-def _build_semantic(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.operators.semindex import (
-        ensure_semantic_index,
-    )
-
-    ensure_semantic_index(spark, sf_dir)
-
-
-def _ivfpq_tables(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
-    from stream_processor_spark.operators.annindex import ivfpq_names
-
-    return ivfpq_names(sf_dir)
-
-
-def _build_ivfpq(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.operators.annindex import ensure_ivfpq_index
-
-    ensure_ivfpq_index(spark, sf_dir)
-
-
-def _sign_tables(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
-    from stream_processor_spark.operators.annindex import sign_names
-
-    return sign_names(sf_dir)
-
-
-def _build_sign(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.operators.annindex import ensure_sign_index
-
-    ensure_sign_index(spark, sf_dir)
-
-
-def _graph_tables(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
-    from stream_processor_spark.operators.graphann import (
-        GRAPH_M,
-        graph_auto_params,
-        graph_names,
-    )
-
+def _graph_names(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
     # the layout name follows the scale-aware auto params (fixture
     # profile at oracle scales, schedule + cap above — round 12), so
     # the catalog probe and the entries' ensure always agree
-    bits, cap = graph_auto_params(spark, sf_dir)
-    return graph_names(sf_dir, bits, GRAPH_M, cap)
+    bits, cap = graphann.graph_auto_params(spark, sf_dir)
+    return graphann.graph_names(sf_dir, bits, graphann.GRAPH_M, cap)
 
 
-def _build_graph(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.operators.graphann import ensure_graph_index
-
-    ensure_graph_index(spark, sf_dir)
-
-
-def _events_extracted_tables(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, ...]:
-    from stream_processor_spark.queries.reference import (
-        events_extracted_names,
-    )
-
-    return events_extracted_names(sf_dir)
-
-
-def _build_events_extracted(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.queries.reference import (
-        _ensure_events_extracted,
-    )
-
-    _ensure_events_extracted(spark, sf_dir)
-
-
-def _zonemap_tables(spark: SparkSession, sf_dir: str) -> tuple[str, ...]:
-    from stream_processor_spark.operators.zonemap import zonemap_names
-
-    return zonemap_names(sf_dir)
-
-
-def _build_zonemap(spark: SparkSession, sf_dir: str) -> None:
-    from stream_processor_spark.operators.zonemap import ensure_zonemap
-
-    ensure_zonemap(spark, sf_dir)
-
-
-# layout key -> (deterministic table names, builder)
+# layout key -> (deterministic table names, idempotent build), both
+# called as fn(spark, sf_dir)
 LAYOUTS = {
-    "bm25_postings": (_postings_tables, _build_postings),
-    "ivf_index": (_ivf_tables, _build_ivf),
-    "bucketed_fact": (_bucketed_tables, _build_bucketed),
-    "ivf_trained": (_ivf_trained_tables, _build_ivf_trained),
-    "pq_index": (_pq_tables, _build_pq),
-    "zonemap": (_zonemap_tables, _build_zonemap),
-    "semantic_index": (_semantic_tables, _build_semantic),
-    "minhash_index": (_minhash_tables, _build_minhash),
-    "ivfpq_index": (_ivfpq_tables, _build_ivfpq),
-    "sign_index": (_sign_tables, _build_sign),
-    "graph_index": (_graph_tables, _build_graph),
-    "events_extracted": (_events_extracted_tables, _build_events_extracted),
+    "bm25_postings": (postings.postings_names, postings.ensure_postings),
+    "ivf_index": (
+        lambda s, d: annindex.ivf_names(d),
+        annindex.ensure_ivf_index,
+    ),
+    "bucketed_fact": (storage.bucketed_pair_names, storage.bucketed_pair),
+    "ivf_trained": (
+        lambda s, d: annindex.ivf_trained_names(d),
+        annindex.ensure_ivf_trained_index,
+    ),
+    "pq_index": (
+        lambda s, d: annindex.pq_names(d),
+        annindex.ensure_pq_index,
+    ),
+    "zonemap": (
+        lambda s, d: zonemap.zonemap_names(d),
+        zonemap.ensure_zonemap,
+    ),
+    "semantic_index": (
+        lambda s, d: semindex.semantic_names(d),
+        semindex.ensure_semantic_index,
+    ),
+    "minhash_index": (
+        lambda s, d: dedup.minhash_names(d),
+        dedup.ensure_minhash_index,
+    ),
+    "ivfpq_index": (
+        lambda s, d: annindex.ivfpq_names(d),
+        annindex.ensure_ivfpq_index,
+    ),
+    "sign_index": (
+        lambda s, d: annindex.sign_names(d),
+        annindex.ensure_sign_index,
+    ),
+    "graph_index": (_graph_names, graphann.ensure_graph_index),
+    "events_extracted": (
+        lambda s, d: reference.events_extracted_names(d),
+        reference._ensure_events_extracted,
+    ),
 }
 
 # semantic name -> Route. Both registry entries of a route share result
@@ -370,8 +255,6 @@ class Router:
 
     def query(self, name: str) -> DataFrame:
         """The routed DataFrame for semantic query ``name``."""
-        from stream_processor_spark.queries import REGISTRY
-
         entry, _ = self.resolve(name)
         return REGISTRY[entry].fn(self.spark, self.sf_dir)
 

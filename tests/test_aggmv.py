@@ -21,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from stream_processor_spark.operators import aggmv
+from stream_processor_spark.operators.storage import stream_updates
 from tests.conftest import SF_SMALL
 
 
@@ -118,8 +119,10 @@ def test_streaming_maintenance_converges(spark, tmp_path, lineitem):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(stream_src))
     )
-    q = aggmv.stream_agg_mv_updates(
-        spark, fact_stream, name, str(tmp_path / "ckpt")
+    q = stream_updates(
+        fact_stream,
+        lambda b: aggmv.append_agg_mv(spark, name, b),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
 

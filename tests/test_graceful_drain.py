@@ -20,11 +20,13 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-# 240 s matches the runner's --timeout: the subprocess pipeline's first
-# micro-batch can take >90 s on a loaded/shared host (round-16: the 90 s
-# wait flaked once with three Spark JVMs running; solo the whole test
-# passes in ~84 s).
-def _wait_for(predicate, timeout=240.0, interval=0.5, what="condition"):
+# The subprocess pipeline's first micro-batch can take >90 s on a
+# loaded/shared host (round-16: the 90 s wait flaked once with three
+# Spark JVMs running; solo the whole test passes in ~84 s). 210 s stays
+# under the 240 s per-test --timeout, so a slow host fails here with
+# "timed out waiting for <what>" instead of being killed by the timeout
+# without that message.
+def _wait_for(predicate, timeout=210.0, interval=0.5, what="condition"):
     deadline = time.monotonic() + timeout
     while time.monotonic() < deadline:
         if predicate():

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from stream_processor_spark.catalog import Tables
 from stream_processor_spark.operators import joinmv
+from stream_processor_spark.operators.storage import stream_updates
 
 
 def _full_join(t):
@@ -130,17 +131,17 @@ def test_streaming_left_maintenance_and_restart(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = joinmv.stream_join_mv_updates(
-        spark, stream, names, str(tmp_path / "ckpt")
-    )
+
+    def append(b):
+        joinmv.append_left(spark, names, b)
+
+    q = stream_updates(stream, append, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     got = joinmv.serve_join_mv(spark, names)
     assert _sorted_rows(got) == _sorted_rows(_full_join(t))
 
     # restart over the same source: checkpoint + fingerprints → no dup
-    q2 = joinmv.stream_join_mv_updates(
-        spark, stream, names, str(tmp_path / "ckpt")
-    )
+    q2 = stream_updates(stream, append, str(tmp_path / "ckpt"))
     q2.awaitTermination(120)
     assert joinmv.serve_join_mv(spark, names).count() == got.count()
 
@@ -250,9 +251,12 @@ def test_streaming_txn_sink_end_to_end_and_restart(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = joinmv.stream_join_mv_updates_txn(
-        spark, stream, names, root, str(tmp_path / "ckpt")
-    )
+
+    def append(b):
+        sink = TxnTable(b.sparkSession, root)
+        joinmv.append_with_txn_sink(spark, names, sink, b, "L")
+
+    q = stream_updates(stream, append, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     table = TxnTable(spark, root)
     expect = _sorted_rows(_full_join(t))
@@ -260,9 +264,7 @@ def test_streaming_txn_sink_end_to_end_and_restart(spark, sf_dir, tmp_path):
     assert _sorted_rows(table.read()) == expect
     v = table.latest_version()
 
-    q2 = joinmv.stream_join_mv_updates_txn(
-        spark, stream, names, root, str(tmp_path / "ckpt")
-    )
+    q2 = stream_updates(stream, append, str(tmp_path / "ckpt"))
     q2.awaitTermination(120)
     assert table.latest_version() == v  # nothing re-committed
     assert _sorted_rows(TxnTable(spark, root).read()) == expect

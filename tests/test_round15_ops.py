@@ -425,3 +425,35 @@ def test_pq_residual_slim_cache_lazy_and_fresh_per_invocation(spark):
     sc.setJobGroup(None, None)
     assert rows2 == rows
     assert exec2_jobs * 2 > exec_jobs, (exec_jobs, exec2_jobs)
+
+
+def test_pq_residual_drop_previous_skips_stopped_session_only(monkeypatch):
+    """Dropping the previous invocation's caches skips a handle whose
+    SparkSession has stopped (its unpersist would raise) but lets an
+    unpersist failure on a live session propagate. Fake handles: the
+    shared session fixture must not be stopped."""
+    from types import SimpleNamespace
+
+    from stream_processor_spark.queries import llm_data as ld
+
+    def handle(jsc, unpersist):
+        sc = SimpleNamespace(_jsc=jsc)
+        return SimpleNamespace(
+            sparkSession=SimpleNamespace(sparkContext=sc), unpersist=unpersist
+        )
+
+    def must_not_run():
+        raise AssertionError("unpersist on a stopped session")
+
+    def live_failure():
+        raise RuntimeError("live unpersist failed")
+
+    monkeypatch.setattr(ld, "_PQR_PERSISTED", [handle(None, must_not_run)])
+    ld._pqr_drop_previous()
+    assert ld._PQR_PERSISTED == []
+
+    monkeypatch.setattr(
+        ld, "_PQR_PERSISTED", [handle(object(), live_failure)]
+    )
+    with pytest.raises(RuntimeError, match="live unpersist failed"):
+        ld._pqr_drop_previous()

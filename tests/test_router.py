@@ -100,6 +100,21 @@ def test_plan_report_covers_every_route(spark, routed_dir):
         assert entry in REGISTRY
 
 
+def test_every_layout_names_probe_before_build(spark, routed_dir):
+    """Every LAYOUTS entry's names probe — including the graph one,
+    which no route with a scratch twin reaches via `plan_report` —
+    yields table names on a fresh sf-dir, and none of them exists
+    before a build."""
+    from stream_processor_spark.router import LAYOUTS
+
+    r = Router(spark, routed_dir)
+    for layout, (names_fn, _ensure) in LAYOUTS.items():
+        names = names_fn(spark, routed_dir)
+        assert isinstance(names, tuple) and names, layout
+        assert all(isinstance(n, str) and n for n in names), layout
+        assert r.has_layout(layout) is False, layout
+
+
 def test_semantic_dedup_route_flips_and_matches(spark, routed_dir):
     """Round-8 semantic-dedup layout: the route resolves scratch before
     the index exists, indexed after `ensure`, and both plans return the
